@@ -5,7 +5,7 @@ from .dedup import (duplicate_spans, sorted_neighborhood_pairs, edit_distance_pa
                     set_similarity_pairs, containment_pairs,
                     embedding_dedup_pairs, exact_dedup,
                     minhash_banding, lsh_pairs_incremental,
-                    minhash_lsh_pairs, minhash_signature, near_dedup,
+                    minhash_lsh_pairs, near_dedup,
                     ngram_jaccard_pairs, shingles, simhash)
 from .graph import bfs_distances, cc_incremental, connected_components, label_propagation, pagerank, triangle_count, weighted_distances
 from .similarity import (brute_force_topk, cosine, dequantize_embeddings,
@@ -50,7 +50,7 @@ from .linalg import embedding_covariance, pca_project, rademacher_projection
 __all__ = [
     "connected_components", "triangle_count", "bfs_distances", "weighted_distances", "label_propagation", "pagerank", "near_dedup", "duplicate_spans",
     "embedding_dedup_pairs", "exact_dedup", "minhash_lsh_pairs",
-    "minhash_signature", "minhash_banding", "lsh_pairs_incremental", "ngram_jaccard_pairs", "shingles", "simhash",
+    "minhash_banding", "lsh_pairs_incremental", "ngram_jaccard_pairs", "shingles", "simhash",
     "brute_force_topk", "cosine", "dequantize_embeddings", "ivf_topk",
     "lsh_topk", "quantize_embeddings",
     "bm25_scores", "bpe_ish_token_count", "char_entropy", "chunk_documents",

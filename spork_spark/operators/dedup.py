@@ -81,57 +81,6 @@ def _shingle_instances(df: DataFrame, id_col: str, text_col: str,
                       F.expr(f"substring(__t, __i, {int(n)})").alias("__s")))
 
 
-def _shingle_sets(df: DataFrame, id_col: str, text_col: str,
-                  n: int, spread: bool = True) -> DataFrame:
-    """(id, __sh) per-doc DISTINCT shingle arrays, built from codegen
-    instance rows + one collect_set aggregate instead of the
-    interpreted `shingles()` HOF projection. The aggregation's id-keyed
-    exchange doubles as the REUSE POINT for verification, which joins
-    this table once per pair side under alias renames — renamed
-    projections above a shared exchange still ReuseExchange, while a
-    renamed HOF projection re-executes per consumer. A doc whose only
-    instance is the null shingle (null text) keeps `shingles()`'s
-    [null] representation (collect_set drops nulls).
-
-    ``spread=False`` skips the single-task-scan repartition probe:
-    _spread's getNumPartitions forces a full physical-planning pass of
-    the input subtree at CONSTRUCTION time, which is wasted (and, for
-    an input that embeds the candidate-pair plan, expensive — measured
-    +13 s of build on lsh_pairs_incremental) whenever the input is
-    already behind a join/aggregate rather than a bare scan.
-
-    The sets carry LONG surrogate ids, not the shingle strings: the
-    distinct vocabulary gets a deterministic rank (row_number ordered
-    by shingle — injective, and stable across re-executions, so the
-    two verify sides agree even when their subplans don't share an
-    exchange) attached back by broadcast join. Consumers only take
-    intersection/union SIZES, which an injective map preserves exactly
-    (parity pinned in the verify A/B: identical pairs and jaccards);
-    the collect_set exchange and every array_intersect/array_union
-    then move/hash 8-byte longs instead of n-char strings (measured
-    −1.2 s on the minhash verify at sf0.1). The single-partition rank
-    window and the broadcast are bounded by the same argument as the
-    banding's vocab broadcast: a character n-gram vocabulary is
-    charset-bounded, and this table is strictly narrower than the
-    banding's 64-hash one. Null-text docs keep their [null] set via
-    the LEFT join (null shingles rank to null, collect_set drops them,
-    the empty-set branch restores [null] as a long array — null
-    set-element semantics are type-independent)."""
-    src = df.select(id_col, text_col)
-    inst = _shingle_instances(_spread(src) if spread else src,
-                              id_col, text_col, n)
-    vocab = inst.where(F.col("__s").isNotNull()).select("__s").distinct()
-    ranked = vocab.select(
-        "__s", F.row_number().over(Window.orderBy("__s")).alias("__sid"))
-    j = inst.join(F.broadcast(ranked), on="__s", how="left")
-    g = j.groupBy(id_col).agg(F.collect_set("__sid").alias("__shs"))
-    return g.select(
-        F.col(id_col),
-        F.when(F.size("__shs") == 0,
-               F.array(F.lit(None).cast("long")))
-         .otherwise(F.col("__shs").cast("array<long>")).alias("__sh"))
-
-
 def _spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition to the session's default parallelism when
     the input arrives in FEWER partitions — single-row-group parquet
@@ -158,28 +107,6 @@ def _spread(df: DataFrame) -> DataFrame:
     except Exception:
         pass
     return df
-
-
-def minhash_signature(shingle_col, num_hashes: int = 64,
-                      seed: int = 42) -> "F.Column":
-    """num_hashes-wide MinHash signature: sig[j] = min over shingles of
-    ((a_j * h(s) + b_j) mod p), h = xxhash64. Pure Column expressions."""
-    import random
-    rnd = random.Random(seed)
-    coeffs = [(rnd.randrange(1, MERSENNE_PRIME),
-               rnd.randrange(0, MERSENNE_PRIME)) for _ in range(num_hashes)]
-    hashed = F.transform(shingle_col, lambda s: F.xxhash64(s))
-    # Long arithmetic with wrap-around multiply (Java overflow semantics):
-    # not a textbook universal family, but uniform enough for LSH banding
-    # and ~10× faster than decimal(38,0) arithmetic, which falls out of
-    # whole-stage codegen. pmod keeps values in [0, p).
-    sig = [
-        F.array_min(F.transform(
-            hashed, lambda h: F.pmod(h * a + b, F.lit(MERSENNE_PRIME))))
-        .alias(f"mh_{j}")
-        for j, (a, b) in enumerate(coeffs)
-    ]
-    return F.array(*sig)
 
 
 def _exact_text_groups(df: DataFrame, id_col: str, text_col: str):
@@ -221,6 +148,16 @@ def _group_members(members: DataFrame, id_col: str) -> DataFrame:
                         .alias("__ids")))
 
 
+def _partners(arr: str) -> "F.Column":
+    """The (i < j) partner slice of a sorted array with unique elements:
+    everything after the posexplode anchor at 0-based position __i.
+    posexplode(arr) as (__i, a) + explode(_partners(arr)) as b emits
+    each (a < b) pair exactly once through codegen'd generators, not
+    interpreted transform/flatten struct building."""
+    return F.slice(F.col(arr), F.col("__i") + 2,
+                   F.greatest(F.size(arr) - F.col("__i") - 1, F.lit(0)))
+
+
 def _within_group_pairs(members: DataFrame, id_col: str) -> DataFrame:
     """(id_a < id_b, __gid) — every pair inside an exact-dup group.
     Quadratic in group size, which is exactly the OUTPUT size (those
@@ -234,9 +171,7 @@ def _within_group_pairs(members: DataFrame, id_col: str) -> DataFrame:
                    F.col("__ids"))
     return pe.select(
         "__gid", "id_a",
-        F.explode(F.slice(F.col("__ids"), F.col("__i") + 2,
-                          F.greatest(F.size("__ids") - F.col("__i") - 1,
-                                     F.lit(0)))).alias("id_b"))
+        F.explode(_partners("__ids")).alias("id_b"))
 
 
 def _expand_rep_pairs(rep_pairs: DataFrame, members: DataFrame,
@@ -329,37 +264,80 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     return _jaccard_verify(pairs, shing, id_col, threshold)
 
 
+def _check_hash_fn(hash_fn: str) -> None:
+    if hash_fn not in ("xxhash64", "md5"):
+        raise ValueError(
+            f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
+
+
 def _banding_with_sets(df: DataFrame, id_col: str, text_col: str,
                        shingle_n: int, num_hashes: int, bands: int,
                        seed: int, hash_fn: str,
                        spread: bool = True):
-    """(banded, sets) — LSH banding rows AND per-doc distinct-shingle
-    surrogate sets, both derived from ONE shared groupBy(id) aggregate
-    (r11, guide §2.4): the separate minhash_banding + _shingle_sets
-    pair each re-ran the shingle explode + broadcast-vocab join +
-    per-instance aggregation — the two dominant stages of every
-    minhash query executed the same kernel twice. Here one pass
-    computes the num_hashes min() columns AND collect_set of the
-    surrogate id per doc; the banding expansion and both verify sides
-    consume projections of the same exchange, so the kernel runs once.
+    """(banded, sets) — THE MinHash-LSH kernel. Every MinHash path in
+    this module is a projection of its result, so the stored index
+    (minhash_banding), the full run (minhash_lsh_pairs) and the
+    incremental verify (lsh_pairs_incremental) cannot drift apart:
 
-    The shared vocabulary table carries the hash columns AND the
-    surrogate rank, so the per-shingle hashes are computed once per
-    DISTINCT shingle (minhash_banding's broadcast trick) and only one
-    vocab distinct is built instead of two.
+    - banded: (id, __band, __bh) LSH banding rows, `bands` per doc;
+    - sets: (id, __sh) per-doc DISTINCT shingle sets as LONG surrogate
+      ids — an injective image of the shingle strings, which preserves
+      the intersection/union SIZES the jaccard verify takes, while the
+      verify exchanges and array_intersect/array_union move and hash
+      8-byte longs (measured -1.2 s on the minhash verify at sf0.1).
 
-    Differences from _shingle_sets, both invisible to the verify
-    consumers: null-shingle instances are dropped by the inner vocab
-    join (null-text docs therefore have no row — they also have no
-    banding rows, so no candidate pair can reference them), and
-    null-id docs are filtered above the aggregate (collect_set over
-    ids already dropped them from every bucket, so they never paired;
-    the explicit filter also ABSORBS the isnotnull predicates the
-    verify joins would otherwise push per-consumer, which would
-    de-canonicalize the shared exchange — the lsh_pairs_incremental
-    lesson)."""
+    Both come from ONE groupBy(id) aggregate over shingle INSTANCES
+    (duplicates kept: min() and collect_set are idempotent): the
+    num_hashes min() columns and collect_set of the surrogate id. A
+    consumer of both halves (minhash_lsh_pairs) runs the kernel once
+    through that shared exchange. A consumer of one half pays only for
+    that half: Catalyst's column pruning drops the unused aggregates and
+    their inputs — banded's plan has no rank Window and no collect_set,
+    the sets' plan no hash expression and no min() (pinned by
+    test_minhash_kernel_projections_prune).
+
+    The per-shingle hashes are a function of the shingle VALUE alone,
+    so they are computed once per DISTINCT shingle on a vocabulary
+    table that also carries the surrogate rank, and attached back by
+    BROADCAST join (sf0.1: 2 041 distinct vs 1.0M instance rows; the
+    earlier sort-merge join shuffled the instance rows and re-ran the
+    explode on both sides — 10.9 s -> 2.4 s for the banding alone).
+    Bounded state: a character n-gram vocabulary is charset-bounded and
+    the partial distinct collapses it before anything moves, which
+    bounds both the broadcast and the single-partition rank window; the
+    rank (row_number ordered by shingle) is injective and stable across
+    re-executions, so the two verify sides agree even when their
+    subplans don't share an exchange. Per doc the
+    aggregation buffers hold num_hashes longs and the doc's distinct
+    shingle ids.
+
+    Null handling: null-shingle instances drop in the inner vocab join,
+    so null-text docs have no banded rows and no sets row (no candidate
+    pair can reference them), and null ids are filtered above the
+    aggregate (collect_set over ids drops them from every bucket, so
+    they never pair; the explicit filter also ABSORBS the isnotnull
+    predicates the verify joins would otherwise push per-consumer,
+    which would de-canonicalize the shared exchange).
+
+    hash_fn='xxhash64': sig[j] = min over shingles of
+    pmod(a_j * xxhash64(s) + b_j, 2^61 - 1), with seeded coefficients
+    and wrap-around long multiplies — not a textbook universal family,
+    but uniform enough for banding, and ~10x faster than decimal
+    arithmetic, which falls out of whole-stage codegen. hash_fn='md5':
+    sig[j] = min(md5(j || ':' || s)) as a lowercase hex string, which
+    ANSI SQL reproduces exactly. The min() runs over the 16-byte
+    UNHEXed digest: lowercase fixed-width hex sorts like its bytes, so
+    lower(hex(min(unhex(h)))) == min(h) byte for byte, while every min
+    buffer compares half the bytes (measured ~2x on the aggregate)."""
     import random
 
+    _check_hash_fn(hash_fn)
+    if not 1 <= bands <= num_hashes:
+        raise ValueError(
+            f"bands must be in 1..num_hashes ({num_hashes}), got {bands}")
+    if num_hashes % bands:
+        raise ValueError(f"num_hashes ({num_hashes}) must be a multiple "
+                         f"of bands ({bands})")
     rows_per_band = num_hashes // bands
     exploded = _shingle_instances(_spread(df) if spread else df,
                                   id_col, text_col, shingle_n)
@@ -420,17 +398,9 @@ def _bucket_pairs(banded: DataFrame, id_col: str) -> DataFrame:
                      .agg(F.sort_array(F.collect_set(F.col(id_col)))
                           .alias("__ids"))
                      .where(F.size("__ids") >= 2))
-    # native (i < j) expansion — posexplode anchor + explode(slice) —
-    # instead of interpreted transform/flatten struct building (same
-    # pair set, codegen'd generators; containment_pairs rationale)
     pe = buckets.select(F.posexplode("__ids").alias("__i", "id_a"),
                         F.col("__ids"))
-    return (pe.select(
-                "id_a",
-                F.explode(F.slice(F.col("__ids"), F.col("__i") + 2,
-                                  F.greatest(F.size("__ids") - F.col("__i")
-                                             - 1, F.lit(0))))
-                 .alias("id_b"))
+    return (pe.select("id_a", F.explode(_partners("__ids")).alias("id_b"))
               .dropDuplicates(["id_a", "id_b"]))
 
 
@@ -445,80 +415,16 @@ def minhash_banding(df: DataFrame, id_col: str, text_col: str,
     `bands` rows per doc) lets later ingest batches dedup against the
     full history WITHOUT recomputing it (lsh_pairs_incremental).
 
-    Signature via explode + num_hashes min() aggregates — identical
-    values to minhash_signature (same coefficients, same long
-    arithmetic) but inside codegen'd HashAggregate with map-side partial
-    aggregation, instead of interpreted per-element higher-order
-    functions (HOF lambdas don't participate in whole-stage codegen;
-    measured 10×+ faster at 5k docs). Banding rows stay NARROW — the
-    bucket self-join is quadratic in bucket size, and a dup-heavy corpus
-    makes buckets big, so candidate rows must not carry shingle arrays.
+    The banded half of the one MinHash kernel (_banding_with_sets), so
+    the stored index is byte-identical to the banding minhash_lsh_pairs
+    pairs on; the unused sets half is pruned from the plan. Banding rows
+    stay NARROW — the bucket expansion is quadratic in bucket size, and
+    a dup-heavy corpus makes buckets big, so candidate rows must not
+    carry shingle arrays.
     """
-    import random
-
-    rows_per_band = num_hashes // bands
-    # Shingle INSTANCES, duplicates kept: every signature entry is a
-    # min(), which is idempotent, so the per-doc array_distinct the
-    # array route paid (interpreted HOF, the most expensive expression
-    # in the old plan) buys nothing here.
-    exploded = _shingle_instances(_spread(df) if spread else df,
-                                  id_col, text_col, shingle_n)
-    if hash_fn == "md5":
-        # min() runs over the 16-byte UNHEXed digest, not the 32-char
-        # hex string: lowercase fixed-width hex sorts exactly like its
-        # bytes, so min(unhex(h)) == unhex(min(h)) and the signatures
-        # converted back with lower(hex(...)) are byte-identical —
-        # while every min buffer compares/copies half the bytes
-        # (measured ~2x on the banding aggregate at sf0.1).
-        hexprs = [F.unhex(F.md5(F.concat(F.lit(f"{j}:"), F.col("__s"))))
-                  .alias(f"__h{j}") for j in range(num_hashes)]
-    else:
-        rnd = random.Random(seed)
-        coeffs = [(rnd.randrange(1, MERSENNE_PRIME),
-                   rnd.randrange(0, MERSENNE_PRIME))
-                  for _ in range(num_hashes)]
-        h = F.xxhash64(F.col("__s"))
-        hexprs = [F.pmod(h * a + b, F.lit(MERSENNE_PRIME))
-                  .alias(f"__h{j}") for j, (a, b) in enumerate(coeffs)]
-    # Hash each DISTINCT shingle once and re-attach instead of
-    # evaluating num_hashes hash expressions on every (doc, shingle)
-    # row: sig[j] = min over the doc's shingles of h(j, s) is a function
-    # of the shingle VALUES, so the minimum over join-attached hashes is
-    # identical. Shingle vocabularies are tiny relative to doc-shingle
-    # rows in any corpus worth dedup-ing (sf0.1: 2 041 distinct vs 1.0M
-    # rows → 500× fewer md5 evaluations; measured 34 s → see
-    # OPTIMIZATION_r10.md). The vocab side is BROADCAST: a character
-    # n-gram vocabulary is charset-bounded and the partial distinct
-    # collapses it before anything moves, so the instance rows are never
-    # shuffled for this join at all — the per-doc min aggregation then
-    # runs map-side-partial in the scan stage and the only full-row
-    # exchange is the groupBy(id). (The previous equi-join shape
-    # defaulted to sort-merge: it shuffled the instance rows AND
-    # re-executed the explode subplan on both sides — measured 10.9 s →
-    # 2.4 s at sf0.1 for the banding alone.)
-    hashed = exploded.select("__s").distinct().select(F.col("__s"), *hexprs)
-    joined = exploded.join(F.broadcast(hashed), on="__s")
-    sig_aggs = [F.min(F.col(f"__h{j}")).alias(f"__mh{j}")
-                for j in range(num_hashes)]
-    sig_elem = (lambda j: F.lower(F.hex(F.col(f"__mh{j}")))) \
-        if hash_fn == "md5" else (lambda j: F.col(f"__mh{j}"))
-    sig = (joined.groupBy(id_col)
-               .agg(*sig_aggs)
-               .select(id_col, F.array(*[sig_elem(j)
-                                         for j in range(num_hashes)])
-                       .alias("__sig")))
-    if hash_fn == "md5":
-        band_key = lambda b: F.md5(F.concat_ws("|", F.slice(  # noqa: E731
-            F.col("__sig"), b * rows_per_band + 1, rows_per_band)))
-    else:
-        band_key = lambda b: F.xxhash64(F.slice(  # noqa: E731
-            F.col("__sig"), b * rows_per_band + 1, rows_per_band)
-            .cast("string"))
-    return sig.select(
-        id_col,
-        F.posexplode(F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            band_key)).alias("__band", "__bh"))
+    return _banding_with_sets(
+        df, id_col, text_col, shingle_n=shingle_n, num_hashes=num_hashes,
+        bands=bands, seed=seed, hash_fn=hash_fn, spread=spread)[0]
 
 
 def _jaccard_verify(pairs: DataFrame, shing: DataFrame, id_col: str,
@@ -599,9 +505,7 @@ def lsh_pairs_incremental(index: DataFrame, corpus: DataFrame,
                         F.col("__ms"))
     mp = pe.select(
         F.col("__a"),
-        F.explode(F.slice(F.col("__ms"), F.col("__i") + 2,
-                          F.greatest(F.size("__ms") - F.col("__i") - 1,
-                                     F.lit(0)))).alias("__b"))
+        F.explode(_partners("__ms")).alias("__b"))
     pairs = (mp.where(F.col("__a.__new") | F.col("__b.__new"))
                .select(F.col("__a.__id").alias("id_a"),
                        F.col("__b.__id").alias("id_b"))
@@ -621,9 +525,14 @@ def lsh_pairs_incremental(index: DataFrame, corpus: DataFrame,
                       .distinct())
     docs = corpus.select(id_col, text_col) \
                  .unionByName(new_docs.select(id_col, text_col))
-    shing = _shingle_sets(
+    # verify sets: the sets half of the shared kernel over the touched
+    # docs only (its banded half and every hash expression prune away);
+    # spread=False because this input embeds the pair plan (_spread's
+    # caller contract — the probe measured +13 s of build here)
+    _, shing = _banding_with_sets(
         docs.join(F.broadcast(touched), on=id_col, how="left_semi"),
-        id_col, text_col, shingle_n, spread=False)
+        id_col, text_col, shingle_n=shingle_n, num_hashes=num_hashes,
+        bands=bands, seed=seed, hash_fn=hash_fn, spread=False)
     return _jaccard_verify(pairs, shing, id_col, threshold)
 
 
@@ -799,9 +708,7 @@ def containment_pairs(df: DataFrame, id_col: str, text_col: str,
                    F.col("__ids"), F.col("__w"))
     anchors = (pe.select(
                    "id_a", "__w",
-                   F.slice(F.col("__ids"), F.col("__i") + 2,
-                           F.greatest(F.size("__ids") - F.col("__i") - 1,
-                                      F.lit(0))).alias("__ptn"))
+                   _partners("__ids").alias("__ptn"))
                  .where(F.size("__ptn") >= 1))
     shared = (anchors.repartition(npart, "id_a")
                      .select("id_a", F.explode("__ptn").alias("id_b"),
@@ -875,6 +782,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str,
     also the better scale shape: explode + 64 codegen'd sum() aggregates
     (map-side partial agg) instead of interpreted per-element HOF lambdas.
     """
+    _check_hash_fn(hash_fn)
     if hash_fn == "md5":
         return _simhash_md5(df, id_col, text_col, shingle_n)
     hashed = F.transform(shingles(text_col, shingle_n),
@@ -1275,9 +1183,7 @@ def set_similarity_candidates(df: DataFrame, id_col: str, text_col: str,
                         F.col("__ps"))
     mpairs = pe.select(
         F.col("__a"),
-        F.explode(F.slice(F.col("__ps"), F.col("__i") + 2,
-                          F.greatest(F.size("__ps") - F.col("__i") - 1,
-                                     F.lit(0)))).alias("__b"))
+        F.explode(_partners("__ps")).alias("__b"))
     na, nb = F.col("__a.__n"), F.col("__b.__n")
     pa, pb = F.col("__a.__p"), F.col("__b.__p")
     # overlap floor for J>=t: alpha = ceil(t*(na+nb)/(1+t)), exact
@@ -1347,9 +1253,7 @@ def edit_distance_pairs(df: DataFrame, id_col: str,
                         F.col("__ps"))
     mpairs = pe.select(
         F.col("__a"),
-        F.explode(F.slice(F.col("__ps"), F.col("__i") + 2,
-                          F.greatest(F.size("__ps") - F.col("__i") - 1,
-                                     F.lit(0)))).alias("__b"))
+        F.explode(_partners("__ps")).alias("__b"))
     return (mpairs
             .where(F.col("__a.__id") < F.col("__b.__id"))
             .where(F.levenshtein(F.col("__a.__s"), F.col("__b.__s")) <= 1)

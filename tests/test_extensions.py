@@ -6,9 +6,9 @@ from pyspark.sql import functions as F
 
 from spork_spark.operators import (
     attach_binary_meta, brute_force_topk, decode_images, detect_language,
-    exact_dedup, extract_features, fingerprint, lsh_topk, minhash_lsh_pairs,
-    ngram_jaccard_pairs, quality_score, sample_frames, simhash, tf_idf,
-    token_count)
+    exact_dedup, extract_features, fingerprint, lsh_topk, minhash_banding,
+    minhash_lsh_pairs, ngram_jaccard_pairs, quality_score, sample_frames,
+    simhash, tf_idf, token_count)
 
 
 @pytest.fixture(scope="module")
@@ -1045,17 +1045,20 @@ def test_asof_join_tolerance_on_timestamps(spark):
     assert stale.collect()[0].p_asof is None
 
 
-def test_lsh_incremental_matches_full_recompute(docs):
+@pytest.mark.parametrize("hash_fn", ["xxhash64", "md5"])
+def test_lsh_incremental_matches_full_recompute(docs, hash_fn):
     """Incremental pairs against a stored index == full-corpus pairs
-    filtered to those touching a new doc — the maintenance invariant."""
-    from spork_spark.operators import lsh_pairs_incremental, minhash_banding
+    filtered to those touching a new doc — the maintenance invariant,
+    and the stored-index vs full-run parity in both hash modes."""
+    from spork_spark.operators import lsh_pairs_incremental
     old = docs.filter(F.col("doc_id") < 2)       # 0, 1 (exact dups)
     new = docs.filter(F.col("doc_id") >= 2)      # 2 (near dup of 0/1), 3, 4
-    idx = minhash_banding(old, "doc_id", "text")
+    idx = minhash_banding(old, "doc_id", "text", hash_fn=hash_fn)
     inc = lsh_pairs_incremental(idx, old, new, "doc_id", "text",
-                                threshold=0.5)
+                                threshold=0.5, hash_fn=hash_fn)
     got = {(r.id_a, r.id_b): r.jaccard for r in inc.collect()}
-    full = minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.5)
+    full = minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.5,
+                             hash_fn=hash_fn)
     new_ids = {2, 3, 4}
     want = {(r.id_a, r.id_b): r.jaccard for r in full.collect()
             if r.id_a in new_ids or r.id_b in new_ids}
@@ -1064,10 +1067,56 @@ def test_lsh_incremental_matches_full_recompute(docs):
     assert (0, 1) not in got                 # old-old pairs never form
 
 
+@pytest.mark.parametrize("hash_fn", ["xxhash64", "md5"])
+def test_minhash_kernel_projections_prune(docs, hash_fn):
+    """The stored index and the verify sets are projections of one
+    MinHash kernel, and each pays only for its own half: column pruning
+    drops the surrogate rank and collect_set from minhash_banding's
+    plan, and the min() signature and every per-permutation hash from
+    the sets plan."""
+    from spork_spark.operators.dedup import _banding_with_sets
+
+    def optimized(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    banded = optimized(minhash_banding(docs, "doc_id", "text",
+                                       hash_fn=hash_fn))
+    assert "min(" in banded
+    assert "Window" not in banded and "collect_set" not in banded
+    _, sets = _banding_with_sets(docs, "doc_id", "text", shingle_n=5,
+                                 num_hashes=64, bands=16, seed=42,
+                                 hash_fn=hash_fn)
+    sets = optimized(sets)
+    assert "collect_set" in sets
+    for hashing in ("min(", "md5(", "xxhash64(", "pmod("):
+        assert hashing not in sets, hashing
+
+
+@pytest.mark.parametrize("build, msg", [
+    (lambda d: minhash_banding(d, "doc_id", "text", hash_fn="MD5"),
+     "hash_fn"),
+    (lambda d: minhash_lsh_pairs(d, "doc_id", "text", hash_fn="sha1"),
+     "hash_fn"),
+    (lambda d: simhash(d, "doc_id", "text", hash_fn="MD5"), "hash_fn"),
+    (lambda d: minhash_banding(d, "doc_id", "text", num_hashes=4,
+                               bands=8), "bands must be"),
+    (lambda d: minhash_lsh_pairs(d, "doc_id", "text", num_hashes=10,
+                                 bands=4), "multiple of bands"),
+], ids=["banding-MD5", "pairs-sha1", "simhash-MD5", "bands>hashes",
+        "hashes%bands"])
+def test_minhash_rejects_bad_params(docs, build, msg):
+    """An unknown hash_fn must not fall back to xxhash64; bands >
+    num_hashes would leave empty band slices that every doc shares, so
+    every pair becomes a candidate; a non-multiple would leave trailing
+    hashes unused."""
+    with pytest.raises(ValueError, match=msg):
+        build(docs)
+
+
 def test_lsh_incremental_new_new_pairs_form(spark):
     """Two near-dup docs arriving in the SAME batch must pair with each
     other, not only with history."""
-    from spork_spark.operators import lsh_pairs_incremental, minhash_banding
+    from spork_spark.operators import lsh_pairs_incremental
     base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
             "lambda mu nu xi omicron pi rho sigma tau upsilon")
     old = spark.createDataFrame(
@@ -1346,25 +1395,27 @@ def test_edit_distance_grouped_expansion_matches_bruteforce(spark):
 
 
 def test_shingle_sets_matches_hof_shingles(spark):
-    """r10: _shingle_sets carries per-doc sets of LONG surrogate ids —
-    an injective image of the shingles() HOF string sets. Consumers
-    (_jaccard_verify) use only intersection/union sizes, so the pinned
-    contract is pairwise set-arithmetic parity across every doc pair,
-    plus the [null] null-text representation and overlapping/truncated
-    short-text grams."""
+    """The MinHash kernel's sets half carries per-doc sets of LONG
+    surrogate ids — an injective image of the shingles() HOF string
+    sets. Consumers (_jaccard_verify) use only intersection/union sizes,
+    so the pinned contract is pairwise set-arithmetic parity across
+    every doc pair, including overlapping/truncated short-text grams.
+    Null-text docs have no row: they have no banding rows either, so no
+    candidate pair can reference them."""
     rows = [(0, "abcdefghijklmno"), (1, "abc"), (2, ""), (3, None),
             (4, "aaaaaaaaaa"), (5, "abcdefghijklmno"), (6, None)]
     df = spark.createDataFrame(rows, "id bigint, text string")
-    from spork_spark.operators.dedup import _shingle_sets, shingles
-    new = {r.id: r["__sh"] for r in
-           _shingle_sets(df, "id", "text", 5).collect()}
+    from spork_spark.operators.dedup import _banding_with_sets, shingles
+    _, sets = _banding_with_sets(df, "id", "text", shingle_n=5,
+                                 num_hashes=64, bands=16, seed=42,
+                                 hash_fn="xxhash64")
+    new = {r.id: r["__sh"] for r in sets.collect()}
     old = {r.id: r["__sh"] for r in
-           df.select("id", shingles("text", 5).alias("__sh")).collect()}
-    assert set(new) == set(old)
+           df.where(F.col("text").isNotNull())
+             .select("id", shingles("text", 5).alias("__sh")).collect()}
+    assert set(new) == set(old) == {0, 1, 2, 4, 5}
     for i in new:
         assert len(set(new[i])) == len(set(old[i]))
-        if old[i] == [None]:          # null text keeps the [null] set
-            assert new[i] == [None]
         for j in new:
             assert len(set(new[i]) & set(new[j])) == \
                    len(set(old[i]) & set(old[j])), (i, j)
