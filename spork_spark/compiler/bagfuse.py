@@ -163,12 +163,10 @@ def try_fuse_topk(pc, group, gens, child_df: DataFrame, ctx, keys):
     # same single-exchange rationale as _maybe_repartition_for_windows:
     # the window forces clustering on the group keys anyway; an explicit
     # repartition runs the rank once, post-exchange, at full parallelism
-    # (and "range" satisfies a downstream ORDER BY key prefix).
-    mode = pc._conf("spark.spork.window.repartitionFirst", "false")
-    if mode == "range":
+    # (and the range exchange satisfies a downstream ORDER BY key prefix).
+    if pc._conf_choice("spark.spork.window.repartitionFirst",
+                       ("false", "range")) == "range":
         pre = pre.repartitionByRange(*key_cols)
-    elif mode == "true":
-        pre = pre.repartition(*key_cols)
     rn = "__topk_rn"
     while rn in pre.columns:
         rn = "_" + rn

@@ -209,6 +209,16 @@ class PlanCompiler:
         except Exception:
             return default
 
+    def _conf_choice(self, key: str, accepted: tuple[str, ...]) -> str:
+        """`_conf` for an enumerated option whose default is
+        ``accepted[0]``. Any other value raises, so a typo (e.g.
+        "Range") fails loudly instead of running the default."""
+        value = self._conf(key, accepted[0])
+        if value not in accepted:
+            raise ValueError(f"{key}={value!r}: accepted values are "
+                             + ", ".join(accepted))
+        return value
+
     def _side_broadcastable(self, left: DataFrame,
                             right: DataFrame) -> bool:
         """True when Catalyst's size estimate puts either join side
@@ -322,9 +332,10 @@ class PlanCompiler:
     def _maybe_repartition_for_windows(self, df: DataFrame,
                                        gens: list[E.Expr]) -> DataFrame:
         """Optional window-input repartition (conf
-        `spark.spork.window.repartitionFirst`, default off): when every
-        window function in the projection shares one PARTITION BY key
-        set, repartition the input on those keys BEFORE the window.
+        `spark.spork.window.repartitionFirst`, accepted values `false`
+        (default) and `range`): when every window function in the
+        projection shares one PARTITION BY key set, range-repartition
+        the input on those keys BEFORE the window.
 
         Why: Spark's WindowGroupLimit rule plants a Partial limit below
         the window's exchange, and that partial pass needs a FULL
@@ -338,59 +349,36 @@ class PlanCompiler:
         0.30s -> 0.22s on rank-top-3-per-customer (FLOOR_r05.json).
         Default OFF: when the map side IS wide and keys repeat across
         many input partitions, the partial group-limit genuinely prunes
-        shuffle volume — the deployment makes the call, like the
-        distinct bypass above.
+        shuffle volume — the deployment makes the call.
 
-        Value "range": repartitionByRange on the same keys. Equal keys
-        still land in one partition (RangePartitioning bounds are key
-        values), so the window's clustering requirement is met by the
-        same single exchange — AND the stage's RangePartitioning(keys
-        ASC) output satisfies any downstream ORDER BY whose sort order
-        starts with the keys ascending (Spark's
-        RangePartitioning.satisfies(OrderedDistribution) prefix rule).
-        A final `ORDER BY key, ...` then plans as a partition-local
-        sort: no second exchange, and — the real win — no range-bound
-        sampling pass that would otherwise EXECUTE THE WHOLE WINDOW
-        SUBPLAN TWICE (Exchange rangepartitioning samples its child;
-        here the sampling runs over the pre-window scan instead).
-        Measured at sf1: 0.43 -> 0.35 s on rank-top-3-per-customer.
-        Trade-off vs hash: range bounds come from a sampling job over
-        the input, and key-value skew skews ranges (hash spreads hot
-        ranges of DISTINCT keys better; a single hot KEY is atomic
-        either way)."""
-        mode = self._conf("spark.spork.window.repartitionFirst", "false")
-        if mode not in ("true", "range"):
+        Range, not hash: equal keys still land in one partition
+        (RangePartitioning bounds are key values), so the window's
+        clustering requirement is met by the same single exchange — AND
+        the stage's RangePartitioning(keys ASC) output satisfies any
+        downstream ORDER BY whose sort order starts with the keys
+        ascending (Spark's RangePartitioning.satisfies(OrderedDistribution)
+        prefix rule). A final `ORDER BY key, ...` then plans as a
+        partition-local sort: no second exchange, and — the real win —
+        no range-bound sampling pass that would otherwise EXECUTE THE
+        WHOLE WINDOW SUBPLAN TWICE (Exchange rangepartitioning samples
+        its child; here the sampling runs over the pre-window scan
+        instead). Measured at sf1: 0.43 -> 0.35 s on
+        rank-top-3-per-customer. Trade-off: range bounds come from a
+        sampling job over the input, and key-value skew skews ranges (a
+        single hot KEY is atomic under any partitioning)."""
+        if self._conf_choice("spark.spork.window.repartitionFirst",
+                             ("false", "range")) == "false":
             return df
-        keysets = []
-
-        def walk(e):
-            if isinstance(e, E.WindowFunc):
-                keysets.append(tuple(repr(p) for p in e.partition_by))
-                return
-            for f in dataclasses.fields(e) if dataclasses.is_dataclass(e) \
-                    else ():
-                v = getattr(e, f.name)
-                for x in (v if isinstance(v, (list, tuple)) else [v]):
-                    if isinstance(x, E.Expr):
-                        walk(x)
-                    elif isinstance(x, tuple):
-                        for y in x:
-                            if isinstance(y, E.Expr):
-                                walk(y)
-
-        for g in gens:
-            walk(g)
-        if not keysets or len(set(keysets)) != 1 or not keysets[0]:
+        wfs = list(self._iter_windowfuncs(gens))
+        keysets = {tuple(repr(p) for p in e.partition_by) for e in wfs}
+        if len(keysets) != 1 or not wfs[0].partition_by:
             return df
         ctx = self._ctx(df)
-        first = next(e for e in self._iter_windowfuncs(gens))
         try:
-            keys = [ctx.compile(p) for p in first.partition_by]
+            keys = [ctx.compile(p) for p in wfs[0].partition_by]
         except Exception:
             return df
-        if mode == "range":
-            return df.repartitionByRange(*keys)
-        return df.repartition(*keys)
+        return df.repartitionByRange(*keys)
 
     def _iter_windowfuncs(self, gens):
         def it(e):
@@ -1714,7 +1702,8 @@ class PlanCompiler:
                 # (shuffle_hash avoids the two per-side sorts — measurably
                 # faster when shuffled partitions fit in memory, which AQE
                 # guards at scale). Default 'auto' defers to Catalyst/AQE.
-                hint = self._conf("spark.spork.join.defaultStrategy", "auto")
+                hint = self._conf_choice("spark.spork.join.defaultStrategy",
+                                         ("auto", "shuffle_hash"))
                 if hint == "shuffle_hash" and \
                         self._side_broadcastable(left, right):
                     # A strategy hint OVERRIDES Catalyst's size-based
@@ -1725,7 +1714,7 @@ class PlanCompiler:
                     # small side broadcasts (and if it somehow doesn't,
                     # preferSortMergeJoin=false still yields SHJ).
                     pass
-                elif hint in ("shuffle_hash", "merge", "broadcast"):
+                elif hint == "shuffle_hash":
                     # Hint the LEFT side: Pig's packager materializes the
                     # earlier inputs and STREAMS the last one, so the left
                     # is the hash-build side (and in left-deep n-way joins
@@ -1903,7 +1892,8 @@ class PlanCompiler:
     def _c_rank(self, node: L.Rank) -> DataFrame:
         df = self._compile(node.child)
         if not node.keys:
-            return self._scalable_row_number(df, node.name)
+            from ..operators._scalable import global_row_number
+            return global_row_number(df, node.name)
         return self._scalable_rank_by(df, node)
 
     def _scalable_rank_by(self, df: DataFrame, node: L.Rank) -> DataFrame:
@@ -1972,29 +1962,6 @@ class PlanCompiler:
         joined = df.join(F.broadcast(ranked_keys) if n_parts <= 1
                          else ranked_keys, on=cond)
         return joined.select(out_rank.alias(node.name), *df.columns)
-
-    def _scalable_row_number(self, df: DataFrame, out_name: str) -> DataFrame:
-        """Reference design (POCounter/PORank, SURVEY.md §2.1 #18): pass 1
-        counts rows per partition (tiny driver collect — one row per
-        partition); pass 2 adds prefix-sum offset to a per-partition
-        row_number. No global shuffle, no 1-partition window."""
-        pid, mid = "__pid", "__mid"
-        staged = df.withColumn(pid, F.spark_partition_id()) \
-                   .withColumn(mid, F.monotonically_increasing_id())
-        # eager localCheckpoint for the same reason as _c_rank: pid/mid
-        # captured here must be identical in the count pass and the join
-        # pass, and recompute does not guarantee that; GC-freed, no
-        # CacheManager pin
-        staged = staged.localCheckpoint(eager=True)
-        from ..operators._scalable import partition_offsets
-        offdf, _ = partition_offsets(
-            staged, {"__off": F.count(F.lit(1))}, pid=pid)
-        staged_off = staged.join(F.broadcast(offdf), on=pid, how="left")
-        w = Window.partitionBy(pid).orderBy(mid)
-        out = staged_off.withColumn(
-            out_name, (F.row_number().over(w)
-                       + F.coalesce(F.col("__off"), F.lit(0))).cast("long"))
-        return out.select(out_name, *df.columns)
 
     # ---------------------------------------------------------------- set ops
     def _c_union(self, node: L.Union) -> DataFrame:

@@ -4,7 +4,7 @@ cardinality (rfm_segments' frequency/monetary score maps, abc_classes'
 key ranking).
 
 Same two-pass design as the engine's RANK implementation
-(compiler/plan.py _scalable_row_number; reference analog
+(global_row_number below; reference analog
 pig:src/org/apache/pig/backend/hadoop/executionengine/physicalLayer/
 relationalOperators/POCounter.java + PORank.java): pass 1 range-
 partitions the input on the sort order and collects ONE row per
@@ -43,8 +43,8 @@ def partition_offsets(staged: DataFrame, aggs: dict, pid: str = "__pid"
     exclusive_prefix_sum below).
 
     ``staged`` must already carry a pinned partition id column ``pid``
-    (spark_partition_id over an eager localCheckpoint or a persisted
-    frame — recompute does not guarantee identical ids). ``aggs`` maps
+    (spark_partition_id over an eager localCheckpoint — recompute does
+    not guarantee identical ids). ``aggs`` maps
     offset-column name -> per-partition aggregate Column; for each, the
     returned frame holds the running total of all LOWER partition ids
     (exclusive). Driver traffic is one row per partition at any data
@@ -66,6 +66,35 @@ def partition_offsets(staged: DataFrame, aggs: dict, pid: str = "__pid"
     return offdf, len(rows)
 
 
+def global_row_number(df: DataFrame, out_name: str) -> DataFrame:
+    """Prepend ``out_name`` = 1-based row number in ``df``'s partition
+    order (partition id, then position within the partition) — bare
+    RANK and sorted-neighborhood positions. Reference design
+    (POCounter/PORank, SURVEY.md §2.1 #18): pass 1 counts rows per
+    partition (one row per partition at the driver); pass 2 adds the
+    prefix-sum offset to a per-partition row_number. No global shuffle,
+    no 1-partition window.
+
+    The eager localCheckpoint pins the staged partition id and position:
+    they must be identical in the count pass and the join pass, and
+    recompute (or cache eviction) does not guarantee that. Its blocks
+    free via GC with the result's lineage — no CacheManager pin.
+    """
+    pid, mid = "__pid", "__mid"
+    staged = (df.withColumn(pid, F.spark_partition_id())
+                .withColumn(mid, F.monotonically_increasing_id())
+                .localCheckpoint(eager=True))
+    offdf, _ = partition_offsets(staged, {"__off": F.count(F.lit(1))},
+                                 pid=pid)
+    w = Window.partitionBy(pid).orderBy(mid)
+    return (staged.join(F.broadcast(offdf), on=pid, how="left")
+                  .withColumn(out_name,
+                              (F.row_number().over(w)
+                               + F.coalesce(F.col("__off"), F.lit(0)))
+                              .cast("long"))
+                  .select(out_name, *df.columns))
+
+
 def exclusive_prefix_sum(df: DataFrame, order: list, value_col: str,
                          out_col: str,
                          num_partitions: int | None = None) -> DataFrame:
@@ -78,7 +107,7 @@ def exclusive_prefix_sum(df: DataFrame, order: list, value_col: str,
     collect (a row per partition), per-partition windows at full
     parallelism. The eager localCheckpoint pins partition ids between
     the count pass and the window pass (recompute does not guarantee
-    identical ids — the same discipline as _scalable_row_number).
+    identical ids — the same discipline as global_row_number).
     """
     spark = df.sparkSession
     if num_partitions:

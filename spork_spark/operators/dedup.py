@@ -1320,7 +1320,7 @@ def sorted_neighborhood_pairs(df: DataFrame, id_col: str, key_col: str,
     Scale shape (no 1-partition global window): ONE repartitionByRange
     on (key, id) + in-partition sort gives the global order; global
     positions come from the reference's POCounter/PORank two-pass
-    design (compiler/plan.py _scalable_row_number — per-partition
+    design (operators/_scalable.py global_row_number — per-partition
     counts, one row per partition at the driver, prefix-sum offsets
     broadcast back). Neighbors then join on position equality
     (rn + k == rn), k in 1..window-1 — an equi-join, never a range
@@ -1331,24 +1331,13 @@ def sorted_neighborhood_pairs(df: DataFrame, id_col: str, key_col: str,
     """
     if window < 2:
         raise ValueError("window must be >= 2 (w-1 neighbors per row)")
-    pid, mid = "__pid", "__mid"
-    base = (df.select(F.col(id_col).alias("__id"),
-                      F.col(key_col).alias("__key"))
-              .where(F.col(key_col).isNotNull())
-              .repartitionByRange(F.col("__key"), F.col("__id"))
-              .sortWithinPartitions("__key", "__id")
-              .withColumn(pid, F.spark_partition_id())
-              .withColumn(mid, F.monotonically_increasing_id())
-              .persist())
-    from spork_spark.operators._scalable import partition_offsets
-    offdf, _ = partition_offsets(base, {"__off": F.count(F.lit(1))},
-                                 pid=pid)
-    w = Window.partitionBy(pid).orderBy(mid)
-    rn = (base.join(F.broadcast(offdf), on=pid, how="left")
-              .withColumn("__rn", (F.row_number().over(w)
-                                   + F.coalesce(F.col("__off"), F.lit(0)))
-                          .cast("long"))
-              .select("__id", "__key", "__rn"))
+    from spork_spark.operators._scalable import global_row_number
+    rn = global_row_number(
+        df.select(F.col(id_col).alias("__id"),
+                  F.col(key_col).alias("__key"))
+          .where(F.col(key_col).isNotNull())
+          .repartitionByRange(F.col("__key"), F.col("__id"))
+          .sortWithinPartitions("__key", "__id"), "__rn")
     ks = F.explode(F.array(*[F.lit(k) for k in range(1, window)]))
     left = rn.select(F.col("__id").alias("id_a"),
                      F.col("__key").alias("key_a"),
@@ -1357,9 +1346,6 @@ def sorted_neighborhood_pairs(df: DataFrame, id_col: str, key_col: str,
              .withColumn("__rn", F.col("__rn_a") + F.col("dist"))
     right = rn.select(F.col("__id").alias("id_b"),
                       F.col("__key").alias("key_b"), "__rn")
-    out = (left.join(right, on="__rn")
-               .select("id_a", "id_b", "key_a", "key_b",
-                       F.col("dist").cast("int").alias("dist")))
-    out = out.localCheckpoint(eager=True)
-    base.unpersist()
-    return out
+    return (left.join(right, on="__rn")
+                .select("id_a", "id_b", "key_a", "key_b",
+                        F.col("dist").cast("int").alias("dist")))

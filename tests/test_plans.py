@@ -496,36 +496,14 @@ def test_distinct_skip_partial_agg_conf(eng, spark):
     assert d_on.count() == d_off.count()
 
 
-def test_window_repartition_first_conf(eng, spark):
-    """spark.spork.window.repartitionFirst=true repartitions on the
-    window PARTITION BY keys before the window: same single exchange,
-    but the sort + WindowGroupLimit run once, post-shuffle, at full
-    parallelism (no map-side full sort on parallelism-starved scans)."""
-    from spork_spark import col
-    from spork_spark.plans import expressions as E
-    orders = eng.load("/root/testdata/sf0.001/orders.parquet")
-    w = E.WindowFunc("rank", [], [col("o_custkey")],
-                     [(col("o_totalprice"), False)])
-    spark.conf.set("spark.spork.window.repartitionFirst", "true")
-    try:
-        ranked = orders.foreach(col("o_custkey").alias("c"),
-                                E.Aliased(w, "rnk")).filter(col("rnk") <= 3)
-        df_on = ranked.df()
-        plan_on = df_on._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.spork.window.repartitionFirst", "false")
-    df_off = orders.foreach(col("o_custkey").alias("c"),
-                            E.Aliased(w, "rnk")).filter(col("rnk") <= 3).df()
-    assert plan_on.count("WindowGroupLimit") <= 1     # no Partial pass
-    assert df_on.count() == df_off.count()
-
-
 def test_window_repartition_first_range_mode(eng, spark):
     """repartitionFirst="range": one RangePartitioning exchange feeds
-    the window, and a downstream ORDER BY prefixed by the window keys
-    plans as a partition-local sort — NO second exchange, so no
-    range-bound sampling pass re-executing the window subplan. Output
-    must be identical (including global order) to the hash mode."""
+    the window, so the sort + WindowGroupLimit run once, post-shuffle,
+    at full parallelism (no map-side Partial group-limit pass), and a
+    downstream ORDER BY prefixed by the window keys plans as a
+    partition-local sort — NO second exchange, so no range-bound
+    sampling pass re-executing the window subplan. Output must be
+    identical (including global order) to the default mode."""
     from spork_spark import col
     from spork_spark.plans import expressions as E
 
@@ -556,11 +534,43 @@ def test_window_repartition_first_range_mode(eng, spark):
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
         spark.conf.set("spark.spork.window.repartitionFirst", "false")
-    rows_hash = [tuple(r) for r in build().collect()]
+    rows_off = [tuple(r) for r in build().collect()]
     assert plan.count("Exchange rangepartitioning") == 1
     assert "Exchange hashpartitioning" not in plan
-    assert rows_rng == rows_hash and rows_rng     # exact global order
-    assert rows_aqe == rows_hash                  # AQE-coalesced parity
+    assert plan.count("WindowGroupLimit") <= 1    # no Partial pass
+    assert rows_rng == rows_off and rows_rng      # exact global order
+    assert rows_aqe == rows_off                   # AQE-coalesced parity
+
+
+@pytest.mark.parametrize("key,value,accepted", [
+    ("spark.spork.window.repartitionFirst", "Range", "false, range"),
+    ("spark.spork.window.repartitionFirst", "true", "false, range"),
+    ("spark.spork.join.defaultStrategy", "Shuffle_Hash",
+     "auto, shuffle_hash"),
+    ("spark.spork.join.defaultStrategy", "merge", "auto, shuffle_hash"),
+])
+def test_enumerated_conf_rejects_unknown_value(eng, spark, key, value,
+                                               accepted):
+    """A typo or a removed value in an enumerated spark.spork.* option
+    raises at compile time, naming the accepted values, instead of
+    silently running the default."""
+    from spork_spark.plans import expressions as E
+    orders = eng.load(f"{SF}/orders.parquet")
+    cust = eng.load(f"{SF}/customer.parquet")
+    w = E.WindowFunc("rank", [], [col("o_custkey")],
+                     [(col("o_totalprice"), False)])
+    default = spark.conf.get(key, accepted.split(", ")[0])
+    spark.conf.set(key, value)
+    try:
+        with pytest.raises(ValueError, match=accepted):
+            if key.endswith("repartitionFirst"):
+                orders.foreach(col("o_custkey").alias("c"),
+                               E.Aliased(w, "rnk")).df()
+            else:
+                cust.join([col("c_custkey")], orders,
+                          [col("o_custkey")]).df()
+    finally:
+        spark.conf.set(key, default)
 
 
 def test_join_hint_skipped_when_side_broadcastable(eng, spark):
