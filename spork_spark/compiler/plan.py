@@ -28,7 +28,6 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from ..caching import track
 from ..functions.builtins import ALGEBRAIC_AGGS
@@ -1905,9 +1904,10 @@ class PlanCompiler:
 
         1. aggregate to the distinct-key table with counts (shuffle 1,
            partial agg — |keys| rows, not |rows|);
-        2. range-sort the key table and prefix-sum the counts with the
-           same two-pass per-partition-offset trick as bare RANK (the
-           offsets collect is one row per partition);
+        2. prefix-sum the counts over the range-partitioned key table
+           with the engine's one two-pass core, shared with bare RANK
+           (operators/_scalable.py; the offsets collect is one row per
+           partition);
         3. join ranks back on the keys (shuffle 2) — null-safe equality,
            because Pig ranks null keys (they sort smallest).
 
@@ -1922,38 +1922,13 @@ class PlanCompiler:
         order = [F.col(n).asc_nulls_first() if asc
                  else F.col(n).desc_nulls_last()
                  for (_, asc), n in zip(node.keys, key_names)]
-        kdf = kdf.orderBy(*order)
+        # the engine's one two-pass prefix sum (operators/_scalable.py):
+        # rank needs the exclusive ROW total, dense the exclusive KEY total
+        from ..operators._scalable import exclusive_prefix_sum
+        ranked_keys, n_parts = exclusive_prefix_sum(
+            kdf, order, {"__rank": F.col("__cnt"), "__dense": F.lit(1)})
 
-        pid = "__pid"
-        # eager localCheckpoint, not persist: the offsets collected below
-        # must match the partition ids the later join sees, and a
-        # recomputed range exchange can re-sample different bounds
-        # (RangePartitioner seeds from the RDD id) — checkpointing freezes
-        # the assignment; the RDD-level blocks free via GC with the
-        # result's lineage instead of pinning a CacheManager entry
-        staged = kdf.withColumn(pid, F.spark_partition_id()) \
-                    .localCheckpoint(eager=True)
-        # shared two-pass offsets core (operators/_scalable.py): rank
-        # needs the exclusive ROW total, dense the exclusive KEY total
-        from ..operators._scalable import partition_offsets
-        offdf, n_parts = partition_offsets(
-            staged, {"__rowoff": F.sum("__cnt"),
-                     "__keyoff": F.count(F.lit(1))}, pid=pid)
-        staged_off = staged.join(F.broadcast(offdf), on=pid, how="left")
-        w = Window.partitionBy(pid).orderBy(*order) \
-                  .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        running = F.sum("__cnt").over(w)
-        wrow = Window.partitionBy(pid).orderBy(*order)
-        ranked_keys = staged_off.select(
-            *key_names,
-            (F.coalesce(F.col("__rowoff"), F.lit(0))
-             + running - F.col("__cnt") + 1)
-            .cast("long").alias("__rank"),
-            (F.coalesce(F.col("__keyoff"), F.lit(0))
-             + F.row_number().over(wrow))
-            .cast("long").alias("__dense"))
-
-        out_rank = F.col("__dense") if node.dense else F.col("__rank")
+        out_rank = (F.col("__dense") if node.dense else F.col("__rank")) + 1
         orig_keys = [ctx.compile(k) for k, _ in node.keys]
         cond = None
         for oc, n in zip(orig_keys, key_names):

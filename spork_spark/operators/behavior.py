@@ -248,17 +248,16 @@ def rfm_segments(df: DataFrame, user_col: str = "user_id",
     joined back to the user table. Recency cardinality is bounded
     (days), but frequency/monetary distinct-value cardinality
     approaches USER cardinality (~1e9 at 100 TB), so each map is built
-    behind a counted-cardinality fence
-    (spark.spork.prefixSum.cardinalityFence, default 100k): below it,
-    a single window + broadcast-joined map (cheap, one task over a
-    small table); above it, the range-partitioned two-pass exclusive
-    prefix sum (_scalable.exclusive_prefix_sum — the POCounter/PORank
-    design) with an UN-hinted join so Spark may pick SMJ. Exact
-    integers end to end; both paths produce identical scores (the bin
-    rule depends only on the exclusive cumulative count).
+    behind a counted-cardinality fence (_scalable.CARDINALITY_FENCE,
+    100k rows): below it, a single window + broadcast-joined map
+    (cheap, one task over a small table); above it, the
+    range-partitioned two-pass exclusive prefix sum
+    (_scalable.exclusive_prefix_sum — the POCounter/PORank design) with
+    an UN-hinted join so Spark may pick SMJ. Exact integers end to end;
+    both paths produce identical scores (the bin rule depends only on
+    the exclusive cumulative count).
     """
-    from spork_spark.operators._scalable import (cardinality_fence,
-                                                 exclusive_prefix_sum)
+    from spork_spark.operators import _scalable
     day = F.date_trunc("day", F.col(ts_col)).cast("date")
     cents = F.floor(F.col(value_col).cast("double") * scale + 0.5) \
              .cast("long")
@@ -276,7 +275,6 @@ def rfm_segments(df: DataFrame, user_col: str = "user_id",
                               F.datediff("__mx", "__last").cast("long"))
                   .drop("__mx", "__last"))
 
-    fence = cardinality_fence(df.sparkSession)
     # The fence needs each metric's distinct-value count BEFORE the
     # plan is chosen. Persist the per-user table (it feeds three score
     # maps, the fence counts, and the final joins) and take all three
@@ -296,7 +294,7 @@ def rfm_segments(df: DataFrame, user_col: str = "user_id",
                     .agg(F.count(F.lit(1)).alias("__c"))
         order = F.col("__v").asc() if ascending_is_good \
             else F.col("__v").desc()
-        small = cards[metric] <= fence
+        small = cards[metric] <= _scalable.CARDINALITY_FENCE
         if small:
             w = Window.orderBy(order).rowsBetween(
                 Window.unboundedPreceding, -1)
@@ -304,7 +302,8 @@ def rfm_segments(df: DataFrame, user_col: str = "user_id",
                                   F.coalesce(F.sum("__c").over(w),
                                              F.lit(0)))
         else:
-            cum = exclusive_prefix_sum(dist, [order], "__c", "__cum")
+            cum, _ = _scalable.exclusive_prefix_sum(
+                dist, [order], {"__cum": F.col("__c")})
         tot = dist.groupBy().agg(F.sum("__c").alias("__t"))
         return (cum.crossJoin(F.broadcast(tot))
                    .select(F.col("__v").alias(metric),

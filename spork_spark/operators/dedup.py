@@ -1320,11 +1320,12 @@ def sorted_neighborhood_pairs(df: DataFrame, id_col: str, key_col: str,
     Scale shape (no 1-partition global window): ONE repartitionByRange
     on (key, id) + in-partition sort gives the global order; global
     positions come from the reference's POCounter/PORank two-pass
-    design (operators/_scalable.py global_row_number — per-partition
-    counts, one row per partition at the driver, prefix-sum offsets
-    broadcast back). Neighbors then join on position equality
-    (rn + k == rn), k in 1..window-1 — an equi-join, never a range
-    scan. Ties on key order deterministically by id.
+    design (operators/_scalable.py global_row_number over the engine's
+    one two-pass core — per-partition counts, one row per partition at
+    the driver, prefix-sum offsets broadcast back). Neighbors then
+    join on position equality (rn + k == rn), k in 1..window-1 — an
+    equi-join, never a range scan. Ties on key order deterministically
+    by id.
 
     Output: (id_a, id_b, key_a, key_b, dist) with dist = rank distance
     (1 = adjacent), id_a the earlier row in sort order.

@@ -654,14 +654,9 @@ class PigParser:
           validation never does.
         A failed statement leaves the alias undefined (Pig rejects the
         statement). Gate: spark.spork.validate.eager (default on)."""
-        if self.check:
-            on = True           # -check IS the validation pass
-        else:
-            try:
-                on = self.engine.spark.conf.get(
-                    "spark.spork.validate.eager", "true") == "true"
-            except Exception:
-                on = True
+        # -check IS the validation pass
+        on = self.check or self._conf_bool("spark.spork.validate.eager",
+                                           True)
         if not on or self._validation_exempt(rel.node):
             return
         try:
@@ -749,22 +744,14 @@ class PigParser:
         thunk = self.rel(alias).store_plan(path, fmt=fmt, **store_opts)
         if self.check:
             pass                # plan built + validated; nothing writes
-        elif self._multiquery_on():
+        elif self._conf_bool("spark.spork.multiquery.enabled", True):
+            # Pig's -no_multiquery switch as a conf: on (default) batches
+            # STOREs to end-of-script; off runs each at its statement
             self._pending_stores.append((path, thunk))
         else:
             thunk()
         self.stored.append((alias, path))
         self.expect("op", ";")
-
-    def _multiquery_on(self) -> bool:
-        """Pig's -no_multiquery switch as a conf: off → every STORE
-        executes at its statement (pre-r10 behavior), on (default) →
-        STOREs batch to end-of-script (Pig's default)."""
-        try:
-            return self.engine.spark.conf.get(
-                "spark.spork.multiquery.enabled", "true") == "true"
-        except Exception:
-            return True
 
     def st_dump(self) -> None:
         self.expect("kw", "dump")

@@ -231,13 +231,13 @@ def test_conversion_times_first_a_to_first_b_after(spark):
     assert r.p90_s == 280.0                        # interpolated, exact
 
 
-def test_rfm_segments_scalable_path_parity_and_plan(spark):
+def test_rfm_segments_scalable_path_parity_and_plan(spark, monkeypatch):
     """Above the cardinality fence, score maps must switch to the
     range-partitioned prefix sum with an UN-hinted join (no broadcast
     of a potentially user-cardinality map) and produce IDENTICAL
     scores to the small-path window."""
     import pyspark.sql.functions as F
-    from spork_spark.operators import rfm_segments
+    from spork_spark.operators import _scalable, rfm_segments
     rows = []
     for u in range(1, 41):          # 40 users, distinct freq/monetary
         rows += [(u, f"2024-01-{(u % 28) + 1:02d}", float(u))] * (u % 7 + 1)
@@ -245,15 +245,12 @@ def test_rfm_segments_scalable_path_parity_and_plan(spark):
         rows, "user_id bigint, ts string, value double") \
         .withColumn("ts", F.col("ts").cast("timestamp"))
     small = {r.user_id: r.segment for r in rfm_segments(df).collect()}
-    spark.conf.set("spark.spork.prefixSum.cardinalityFence", "2")
-    try:
-        big_df = rfm_segments(df)
-        big = {r.user_id: r.segment for r in big_df.collect()}
-        plan = big_df._jdf.queryExecution().executedPlan().toString()
-        # score-map joins must not be broadcast above the fence (the
-        # only broadcasts left are the 1-row mx/tot stats frames), so
-        # at least one score-map join surfaces as a shuffle join
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-    finally:
-        spark.conf.unset("spark.spork.prefixSum.cardinalityFence")
+    monkeypatch.setattr(_scalable, "CARDINALITY_FENCE", 2)
+    big_df = rfm_segments(df)
+    big = {r.user_id: r.segment for r in big_df.collect()}
+    plan = big_df._jdf.queryExecution().executedPlan().toString()
+    # score-map joins must not be broadcast above the fence (the only
+    # broadcasts left are the 1-row mx/tot stats frames), so at least
+    # one score-map join surfaces as a shuffle join
+    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
     assert big == small

@@ -643,19 +643,25 @@ def test_equifreq_bins_window_over_distinct_only(spark):
         "no aggregate below the window: it would scan raw rows"
 
 
-def test_equifreq_bins_above_fence_no_global_window(spark):
-    """Above the cardinality fence the cumulative count must take the
-    range-partitioned two-pass prefix sum: every Window in the plan is
-    partitioned by __pid (no single-task global window), and the
-    offsets arrive as a broadcast join, not a literal map."""
-    from spork_spark.operators import equifreq_bins
-    df = spark.createDataFrame([(float(i),) for i in range(50)],
-                               "value double")
-    spark.conf.set("spark.spork.prefixSum.cardinalityFence", "3")
-    try:
-        plan = _raw_plan(equifreq_bins(df, "value", 5))
-    finally:
-        spark.conf.unset("spark.spork.prefixSum.cardinalityFence")
+@pytest.mark.parametrize("op", ["equifreq_bins", "abc_classes",
+                                "rfm_segments"])
+def test_equifreq_bins_above_fence_no_global_window(spark, monkeypatch, op):
+    """Above the cardinality fence every ordered-cumulative operator
+    must take the range-partitioned two-pass prefix sum: every Window in
+    the plan is partitioned by __pid (no single-task global window), and
+    the offsets arrive as a broadcast join, not a literal map."""
+    import pyspark.sql.functions as F
+    from spork_spark import operators
+    from spork_spark.operators import _scalable
+    df = spark.createDataFrame(
+        [(i % 17, f"2024-01-{i % 28 + 1:02d}", float(i)) for i in range(50)],
+        "k bigint, ts string, value double") \
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+    args = {"equifreq_bins": (df, "value", 5),
+            "abc_classes": (df, "k", "value"),
+            "rfm_segments": (df.withColumnRenamed("k", "user_id"),)}
+    monkeypatch.setattr(_scalable, "CARDINALITY_FENCE", 0)  # two-pass only
+    plan = _raw_plan(getattr(operators, op)(*args[op]))
     for line in plan.splitlines():
         if "windowspecdefinition" in line:
             assert "__pid" in line, f"unpartitioned window: {line}"

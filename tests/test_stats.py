@@ -4,7 +4,7 @@ fixed-range histograms."""
 import pytest
 from pyspark.sql import functions as F
 
-from spork_spark.operators import chi2_contingency, histogram
+from spork_spark.operators import _scalable, chi2_contingency, histogram
 
 
 def test_chi2_independent_uniform_is_zero(spark):
@@ -79,7 +79,7 @@ def test_equifreq_bins_value_is_deterministic_under_ties(spark):
     assert sum(r.cnt for r in out.values()) == 100
 
 
-def test_equifreq_bins_scalable_path_parity(spark):
+def test_equifreq_bins_scalable_path_parity(spark, monkeypatch):
     """Fence forced low: equifreq_bins must route the cumulative count
     through the range-partitioned prefix sum and return byte-identical
     bins to the single-window path."""
@@ -88,12 +88,8 @@ def test_equifreq_bins_scalable_path_parity(spark):
     df = spark.createDataFrame(rows, "value double")
     key = lambda r: (r.bin, r.lo_cents, r.hi_cents, r.n_values, r.cnt)  # noqa: E731
     small = sorted(key(r) for r in equifreq_bins(df, "value", 7).collect())
-    spark.conf.set("spark.spork.prefixSum.cardinalityFence", "3")
-    try:
-        big = sorted(key(r) for r in
-                     equifreq_bins(df, "value", 7).collect())
-    finally:
-        spark.conf.unset("spark.spork.prefixSum.cardinalityFence")
+    monkeypatch.setattr(_scalable, "CARDINALITY_FENCE", 3)
+    big = sorted(key(r) for r in equifreq_bins(df, "value", 7).collect())
     assert big == small
     assert sum(c for *_, c in small) == 540
 
@@ -175,7 +171,7 @@ def test_abc_classes_tie_deterministic(spark):
     assert out["a"] == 0 and out["b"] == 5000   # ties order by key asc
 
 
-def test_abc_classes_scalable_path_parity(spark):
+def test_abc_classes_scalable_path_parity(spark, monkeypatch):
     """Fence forced low: abc_classes must route through the
     range-partitioned prefix sum and return byte-identical classes."""
     from spork_spark.operators import abc_classes
@@ -183,25 +179,44 @@ def test_abc_classes_scalable_path_parity(spark):
     df = spark.createDataFrame(rows, "k string, v double")
     small = {(r.k, r.total_cents, r.cum_before_cents, r.abc_class)
              for r in abc_classes(df, "k", "v").collect()}
-    spark.conf.set("spark.spork.prefixSum.cardinalityFence", "3")
-    try:
-        big = {(r.k, r.total_cents, r.cum_before_cents, r.abc_class)
-               for r in abc_classes(df, "k", "v").collect()}
-    finally:
-        spark.conf.unset("spark.spork.prefixSum.cardinalityFence")
+    monkeypatch.setattr(_scalable, "CARDINALITY_FENCE", 3)
+    big = {(r.k, r.total_cents, r.cum_before_cents, r.abc_class)
+           for r in abc_classes(df, "k", "v").collect()}
     assert big == small
 
 
-def test_abc_classes_scalable_tie_deterministic(spark):
+def test_abc_classes_scalable_tie_deterministic(spark, monkeypatch):
     """Ties on total_cents must keep the key tiebreak across range
     partition boundaries (order includes __k)."""
     from spork_spark.operators import abc_classes
     rows = [(f"k{i:02d}", 10.0) for i in range(20)]
-    spark.conf.set("spark.spork.prefixSum.cardinalityFence", "3")
+    monkeypatch.setattr(_scalable, "CARDINALITY_FENCE", 3)
+    df = spark.createDataFrame(rows, "k string, v double")
+    out = sorted((r.k, r.cum_before_cents)
+                 for r in abc_classes(df, "k", "v").collect())
+    assert [c for _, c in out] == [i * 1000 for i in range(20)]
+
+
+def test_exclusive_prefix_sum_across_partitions(spark):
+    """The two-pass core over more than one range partition: two sums
+    (a value and a row count) over tied values with a key tiebreak
+    must equal a prefix sum computed in Python. Coalescing is off so
+    AQE cannot fold the small input into one partition."""
+    rows = [(i, (i * 7) % 5) for i in range(60)]
+    df = spark.createDataFrame(rows, "k long, v long")
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
     try:
-        df = spark.createDataFrame(rows, "k string, v double")
-        out = sorted((r.k, r.cum_before_cents)
-                     for r in abc_classes(df, "k", "v").collect())
-        assert [c for _, c in out] == [i * 1000 for i in range(20)]
+        out, n_parts = _scalable.exclusive_prefix_sum(
+            df, [F.col("v").desc(), F.col("k")],
+            {"pre": F.col("v"), "pos": F.lit(1)})
+        got = sorted((r.k, r.pre, r.pos) for r in out.collect())
     finally:
-        spark.conf.unset("spark.spork.prefixSum.cardinalityFence")
+        spark.conf.set(conf, old)
+    assert n_parts > 1
+    want, pre = [], 0
+    for pos, (k, v) in enumerate(sorted(rows, key=lambda r: (-r[1], r[0]))):
+        want.append((k, pre, pos))
+        pre += v
+    assert got == sorted(want)

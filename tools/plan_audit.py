@@ -1,14 +1,15 @@
 """Registry-wide physical-plan audit: every registered query's executed
-plan is checked for the two anti-patterns that kill 100 TB jobs —
-cartesian joins (CartesianProduct / BroadcastNestedLoopJoin) and
-row-at-a-time Python (BatchEvalPython) — plus scans wider than the
-query's projection would justify is left to test_plans.py's per-query
-assertions.
+plan is checked for the three anti-patterns that kill 100 TB jobs —
+cartesian joins (CartesianProduct / BroadcastNestedLoopJoin),
+row-at-a-time Python (BatchEvalPython) and unpartitioned windows (a
+Window with no partition expressions runs as one task over its whole
+input) — plus scans wider than the query's projection would justify is
+left to test_plans.py's per-query assertions.
 
-Queries that legitimately use a fenced cartesian or an intrinsic Python
-kernel are WHITELISTED with the reason inline, so the audit is also the
-living inventory of every escape hatch in the engine. Anything not
-whitelisted fails the audit.
+Queries that legitimately use a fenced cartesian, an intrinsic Python
+kernel or a bounded-input global window are WHITELISTED with the reason
+inline, so the audit is also the living inventory of every escape hatch
+in the engine. Anything not whitelisted fails the audit.
 
 Usage: python tools/plan_audit.py [sf_dir]   (plan-only; small jobs run
 for operators that materialize during construction, e.g. k-means seeds)
@@ -19,6 +20,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -80,8 +82,54 @@ PYTHON_OK = {
     "semantic_dedup": "same pandas assignment path",
 }
 
+# name -> bound on the input of its unpartitioned (single-task) Window
+WINDOW_OK = {
+    "rfm": "score maps over at most CARDINALITY_FENCE counted distinct values (two-pass above it)",
+    "abc_suppliers": "key table of at most CARDINALITY_FENCE counted rows (two-pass above it)",
+    "equifreq_bins": "distinct values, at most CARDINALITY_FENCE counted rows (two-pass above it)",
+    "growth": "one row per calendar day",
+    "benford": "total over the 9-row digit domain",
+    "compaction_plan": "file-listing metadata, not data",
+    "dedup_minhash": "shingle-vocabulary rank, bounded by the shingle charset (ROADMAP item 3)",
+    "dedup_incremental": "same shingle-vocabulary rank as dedup_minhash",
+    "dedup_index_roundtrip": "same shingle-vocabulary rank as dedup_minhash",
+}
+
 BAD_CROSS = ("CartesianProduct", "BroadcastNestedLoopJoin")
 BAD_PY = ("BatchEvalPython",)
+_WINDOW_OP = re.compile(r"(?:^|[\s:+-])Window \[")
+_SORT_ITEM = re.compile(r" (?:ASC|DESC) NULLS (?:FIRST|LAST)$")
+
+
+def unpartitioned_window(plan: str) -> bool:
+    """True if some Window operator in ``plan`` has no partition
+    expressions. windowspecdefinition prints its partition expressions
+    first, then its sort items, then the frame: the spec is unpartitioned
+    when its first argument is already a sort item or the frame."""
+    for line in plan.splitlines():
+        if not _WINDOW_OP.search(line):
+            continue
+        i = line.find("windowspecdefinition(")
+        if i < 0:
+            continue
+        start = j = i + len("windowspecdefinition(")
+        depth = 0
+        while j < len(line):
+            ch = line[j]
+            if ch in "([":
+                depth += 1
+            elif ch in ")]":
+                if depth == 0:
+                    break
+                depth -= 1
+            elif ch == "," and depth == 0:
+                break
+            j += 1
+        first = line[start:j].strip()
+        if first.startswith(("specifiedwindowframe", "unspecifiedframe")) \
+                or _SORT_ITEM.search(first):
+            return True
+    return False
 
 
 def main() -> None:
@@ -118,6 +166,13 @@ def main() -> None:
                 else:
                     report["violations"].append(entry)
                 break
+        if unpartitioned_window(plan):
+            entry = {"query": name, "pattern": "unpartitioned Window"}
+            if name in WINDOW_OK:
+                entry["reason"] = WINDOW_OK[name]
+                report["whitelisted_hits"].append(entry)
+            else:
+                report["violations"].append(entry)
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(repo, "PLAN_AUDIT.json"), "w") as fh:
         json.dump(report, fh, indent=1)
